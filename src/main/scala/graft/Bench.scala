@@ -7,6 +7,140 @@ import org.apache.spark.sql.SparkSession
   * job consumes the operators (a bare count() would let Catalyst skip
   * projections entirely). */
 object Bench {
+  /** One timed call: (wall s, executor task-CPU s), or what it threw. */
+  type Timing = Either[Throwable, (Double, Double)]
+
+  /** Times `body` on the wall clock and the task-CPU meter. A call that
+    * throws returns its error instead of the time it took, so a broken
+    * gate never reads as a fast one. */
+  private[graft] def timed(meter: TaskTimeMeter)(body: => Unit): Timing = {
+    val c0 = meter.snapshotSec()
+    val t0 = System.nanoTime()
+    try {
+      body
+      Right(((System.nanoTime() - t0) / 1e9, meter.snapshotSec() - c0))
+    } catch { case e: Throwable => Left(e) }
+  }
+
+  /** Per-gate record: min wall/task over both passes, and each pass's
+    * minima (their divergence is the gate's own noise floor). */
+  private[graft] final case class Gate(n: String, wall: Double, task: Double,
+                                       aW: Double, bW: Double, aT: Double, bT: Double)
+
+  /** Self-validating A/B: a gate runs TWO back-to-back min-of-`reps`
+    * passes, `between()` clearing caches before and after pass B (so B
+    * re-pays query-scoped caches exactly as A did after its cold rep).
+    * Rep 1 of A is `first`, every other rep `rep`. The first failing
+    * rep fails the gate with its error; no timing is kept. */
+  private[graft] def abGate(name: String, reps: Int, first: Timing, rep: => Timing,
+                            between: () => Unit): Either[Throwable, Gate] = {
+    def repeat(k: Int): Either[Throwable, Vector[(Double, Double)]] =
+      (1 to k).foldLeft[Either[Throwable, Vector[(Double, Double)]]](Right(Vector.empty))(
+        (done, _) => done.flatMap(ts => rep.map(ts :+ _)))
+    val passA = first.flatMap(t1 => repeat(reps - 1).map(t1 +: _))
+    between()
+    val passB = passA.flatMap(_ => repeat(reps))
+    between()
+    for (a <- passA; b <- passB) yield {
+      val (aW, aT) = (a.map(_._1).min, a.map(_._2).min)
+      val (bW, bT) = (b.map(_._1).min, b.map(_._2).min)
+      Gate(name, math.min(aW, bW), math.min(aT, bT), aW, bW, aT, bT)
+    }
+  }
+
+  /** First line of the error, class-prefixed and capped — Spark
+    * exceptions carry multi-line plans in their message. */
+  private[graft] def errorText(e: Throwable): String = {
+    val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+    s"${e.getClass.getSimpleName}: $msg".take(160)
+  }
+
+  private def jsonStr(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"").filter(_ >= ' ') + "\""
+
+  /** The full `bench.json` line and the budgeted stdout line. Failed
+    * gates are listed under `failed` with their error, and left out of
+    * `total`, `task_total`, the per-gate maps and the noisy/contended
+    * lists. */
+  private[graft] def records(results: Seq[Gate], failed: Seq[(String, String)],
+                             sfDir: String): (String, String) = {
+    // On frozen code the two A/B minima measure the same plan — so
+    // their divergence IS that query's noise floor, recorded in
+    // bench.json per query and summarized as a `noisy` list (>25% A/B
+    // divergence of the TASK minima above a 0.2 s absolute floor;
+    // sub-floor rows jitter wildly in relative terms but cannot move
+    // the total). A cross-round regression on a query that its own A/B
+    // flags as noisy is noise, not signal.
+    val NoisyPct = 25.0
+    val NoisyFloorSec = 0.2
+    // 2-decimal seconds: 10 ms granularity is far below the
+    // run-to-run noise.
+    def f3(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
+    val total = results.map(_.wall).sum
+    val taskTotal = results.map(_.task).sum
+    def deltaPct(a: Double, b: Double): Double =
+      if (math.min(a, b) <= 0) 0.0
+      else (math.max(a, b) - math.min(a, b)) / math.min(a, b) * 100.0
+    // noisy = TASK-time A/B divergence (a real difference between the
+    // two passes of the same code: plan instability, cache behavior);
+    // contended = wall diverged but task agreed (box noise — trust the
+    // task number, distrust the wall).
+    val noisy = results.collect {
+      case g if g.task >= NoisyFloorSec && deltaPct(g.aT, g.bT) > NoisyPct => g.n
+    }
+    val contended = results.collect {
+      case g if g.wall >= NoisyFloorSec && deltaPct(g.aW, g.bW) > NoisyPct &&
+        !(g.task >= NoisyFloorSec && deltaPct(g.aT, g.bT) > NoisyPct) => g.n
+    }
+    // Full record (all queries, wall + task, both A/B minima) to file.
+    val fullQs = results.map(g => "\"" + g.n + "\":" + f3(g.wall))
+      .mkString("{", ",", "}")
+    val taskQs = results.map(g => "\"" + g.n + "\":" + f3(g.task))
+      .mkString("{", ",", "}")
+    val abQs = results.map { g =>
+      "\"" + g.n + "\":{\"a\":" + f3(g.aW) + ",\"b\":" + f3(g.bW) +
+        ",\"a_task\":" + f3(g.aT) + ",\"b_task\":" + f3(g.bT) +
+        ",\"delta_pct\":" + f3(deltaPct(g.aW, g.bW)) +
+        ",\"task_delta_pct\":" + f3(deltaPct(g.aT, g.bT)) + "}"
+    }.mkString("{", ",", "}")
+    val noisyArr = noisy.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedObj = failed.map { case (n, e) => jsonStr(n) + ":" + jsonStr(e) }.mkString("{", ",", "}")
+    val contendedArr = contended.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val fullLine =
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","task_total":${f3(taskTotal)},"queries":$fullQs,""" +
+        s""""task":$taskQs,"ab":$abQs,"noisy":$noisyArr,"contended":$contendedArr,"failed":$failedObj,""" +
+        s""""noisy_rule":"task-time A/B min divergence > ${f3(NoisyPct)}% at >= ${f3(NoisyFloorSec)}s task; contended = wall-only divergence","sf":"$sfDir"}"""
+    // The STDOUT line must fit the round harness's tail window: it
+    // keeps only the last 2000 bytes of stdout, and the 120-query
+    // record is ~2.4 KB — r5/r6 both landed `parsed: null` because
+    // the line was cut mid-JSON. Print a budgeted line instead:
+    // total + per-query times for the SLOWEST queries, greedily
+    // added until the line would exceed the budget (the omitted
+    // ones are the sub-noise-floor rows; their count and summed
+    // seconds are recorded so the line is still self-consistent).
+    // sbt's trailing "[success] Total time ..." line (~80 B) shares
+    // the window, hence 1800 not 2000.
+    // Budgeted per-query entries are `"name":[wall,task]` pairs
+    // (declared by the `fmt` field) — the compact form that fits the
+    // most gates' task-time into the tail window.
+    val BudgetBytes = 1800
+    val byTime = results.sortBy(g => (-g.wall, g.n))
+    def lineWith(kept: Seq[Gate]): String = {
+      val omitted = results.size - kept.size
+      val omittedSec = total - kept.map(_.wall).sum
+      val qs = kept.map(g => "\"" + g.n + "\":[" + f3(g.wall) + "," + f3(g.task) + "]")
+        .mkString("{", ",", "}")
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","task_total":${f3(taskTotal)},"n_queries":${results.size},""" +
+        s""""failed":$failedObj,""" +
+        s""""fmt":"[wall,task]","noisy":$noisyArr,"contended_n":${contended.size},"omitted":$omitted,"omitted_sec":${f3(omittedSec)},"queries":$qs,"sf":"$sfDir"}"""
+    }
+    val keptCount = (results.size to 0 by -1)
+      .find(n => lineWith(byTime.take(n)).length <= BudgetBytes)
+      .getOrElse(0)
+    val line = lineWith(byTime.take(keptCount).sortBy(_.n))
+    (fullLine, line)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -76,146 +210,44 @@ object Bench {
     })
     def drain(): Unit =
       org.apache.spark.graftbridge.ListenerBusDrain.drain(spark.sparkContext)
-    def noopOnce(name: String, df: org.apache.spark.sql.DataFrame): (Double, Double) = {
-      val c0 = meter.snapshotSec()
-      val t0 = System.nanoTime()
-      try df.write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      (wall, meter.snapshotSec() - c0)
-    }
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
-      val c0 = meter.snapshotSec()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      (wall, meter.snapshotSec() - c0)
-    }
+    def noopOnce(df: org.apache.spark.sql.DataFrame): Timing =
+      timed(meter)(df.write.format("noop").mode("overwrite").save())
+    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Timing =
+      timed(meter)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
     // Rep 1 (identical timing to the old methodology: fn + noop in the
     // timed region) additionally classifies the gate: if fn() fired no
     // job, the returned frame is reusable for the remaining reps.
-    def onceDetect(name: String,
-                   fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Option[org.apache.spark.sql.DataFrame]) = {
-      val c0 = meter.snapshotSec()
-      val t0 = System.nanoTime()
+    def onceDetect(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : (Timing, Option[org.apache.spark.sql.DataFrame]) = {
       var reusable: Option[org.apache.spark.sql.DataFrame] = None
-      try {
+      val t = timed(meter) {
         drain()
         val j0 = jobCount.get
         val df = fn(spark, sfDir)
         drain()
         if (jobCount.get == j0) reusable = Some(df)
         df.write.format("noop").mode("overwrite").save()
-      } catch { case e: Throwable =>
-        reusable = None
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
-      val wall = (System.nanoTime() - t0) / 1e9
-      (wall, meter.snapshotSec() - c0, reusable)
+      (t, reusable)
     }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    // Self-validating A/B: each query runs TWO back-to-back min-of-reps
-    // passes (caches cleared between passes, so B re-pays query-scoped
-    // caches exactly as A did after its cold rep). On frozen code the
-    // two minima measure the same plan — so their divergence IS that
-    // query's noise floor, recorded in bench.json per query and
-    // summarized as a `noisy` list (>25% A/B divergence of the TASK
-    // minima above a 0.2 s absolute floor; sub-floor rows jitter
-    // wildly in relative terms but cannot move the total). A
-    // cross-round regression on a query that its own A/B flags as
-    // noisy is noise, not signal.
-    val NoisyPct = 25.0
-    val NoisyFloorSec = 0.2
-    case class Gate(n: String, wall: Double, task: Double,
-                    aW: Double, bW: Double, aT: Double, bT: Double)
-    val results = ordered.map { case (n, f) =>
-      val r = repsFor(n)
-      val (w1, t1, reusable) = onceDetect(n, f)
-      def rep(): (Double, Double) = reusable match {
-        case Some(df) => noopOnce(n, df)
-        case None => once(n, f)
+    val outcomes = ordered.map { case (n, f) =>
+      val (first, reusable) = onceDetect(f)
+      def rep(): Timing = reusable match {
+        case Some(df) => noopOnce(df)
+        case None => once(f)
       }
-      val a = (w1, t1) +: (2 to r).map(_ => rep())
       // Drop caches between passes and queries: operators cache
       // query-scoped frames (sigs, candidates) that a fresh cluster
       // job wouldn't carry over; letting 108x2x3 of them pile up
       // measures GC pressure, not plans.
-      spark.catalog.clearCache()
-      val b = (1 to r).map(_ => rep())
-      spark.catalog.clearCache()
-      val (aW, aT) = (a.map(_._1).min, a.map(_._2).min)
-      val (bW, bT) = (b.map(_._1).min, b.map(_._2).min)
-      Gate(n, math.min(aW, bW), math.min(aT, bT), aW, bW, aT, bT)
+      val gate = abGate(n, repsFor(n), first, rep(), () => spark.catalog.clearCache())
+      gate.left.foreach(e => System.err.println(s"[bench] $n failed: ${errorText(e)}"))
+      n -> gate
     }
-    // 2-decimal seconds: 10 ms granularity is far below the
-    // run-to-run noise.
-    def f3(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    val total = results.map(_.wall).sum
-    val taskTotal = results.map(_.task).sum
-    def deltaPct(a: Double, b: Double): Double =
-      if (math.min(a, b) <= 0) 0.0
-      else (math.max(a, b) - math.min(a, b)) / math.min(a, b) * 100.0
-    // noisy = TASK-time A/B divergence (a real difference between the
-    // two passes of the same code: plan instability, cache behavior);
-    // contended = wall diverged but task agreed (box noise — trust the
-    // task number, distrust the wall).
-    val noisy = results.collect {
-      case g if g.task >= NoisyFloorSec && deltaPct(g.aT, g.bT) > NoisyPct => g.n
-    }
-    val contended = results.collect {
-      case g if g.wall >= NoisyFloorSec && deltaPct(g.aW, g.bW) > NoisyPct &&
-        !(g.task >= NoisyFloorSec && deltaPct(g.aT, g.bT) > NoisyPct) => g.n
-    }
-    // Full record (all queries, wall + task, both A/B minima) to file.
-    val fullQs = results.map(g => "\"" + g.n + "\":" + f3(g.wall))
-      .mkString("{", ",", "}")
-    val taskQs = results.map(g => "\"" + g.n + "\":" + f3(g.task))
-      .mkString("{", ",", "}")
-    val abQs = results.map { g =>
-      "\"" + g.n + "\":{\"a\":" + f3(g.aW) + ",\"b\":" + f3(g.bW) +
-        ",\"a_task\":" + f3(g.aT) + ",\"b_task\":" + f3(g.bT) +
-        ",\"delta_pct\":" + f3(deltaPct(g.aW, g.bW)) +
-        ",\"task_delta_pct\":" + f3(deltaPct(g.aT, g.bT)) + "}"
-    }.mkString("{", ",", "}")
-    val noisyArr = noisy.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val contendedArr = contended.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullLine =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","task_total":${f3(taskTotal)},"queries":$fullQs,""" +
-        s""""task":$taskQs,"ab":$abQs,"noisy":$noisyArr,"contended":$contendedArr,""" +
-        s""""noisy_rule":"task-time A/B min divergence > ${f3(NoisyPct)}% at >= ${f3(NoisyFloorSec)}s task; contended = wall-only divergence","sf":"$sfDir"}"""
-    // The STDOUT line must fit the round harness's tail window: it
-    // keeps only the last 2000 bytes of stdout, and the 120-query
-    // record is ~2.4 KB — r5/r6 both landed `parsed: null` because
-    // the line was cut mid-JSON. Print a budgeted line instead:
-    // total + per-query times for the SLOWEST queries, greedily
-    // added until the line would exceed the budget (the omitted
-    // ones are the sub-noise-floor rows; their count and summed
-    // seconds are recorded so the line is still self-consistent).
-    // sbt's trailing "[success] Total time ..." line (~80 B) shares
-    // the window, hence 1800 not 2000.
-    // Budgeted per-query entries are `"name":[wall,task]` pairs
-    // (declared by the `fmt` field) — the compact form that fits the
-    // most gates' task-time into the tail window.
-    val BudgetBytes = 1800
-    val byTime = results.sortBy(g => (-g.wall, g.n))
-    def lineWith(kept: Seq[Gate]): String = {
-      val omitted = results.size - kept.size
-      val omittedSec = total - kept.map(_.wall).sum
-      val qs = kept.map(g => "\"" + g.n + "\":[" + f3(g.wall) + "," + f3(g.task) + "]")
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","task_total":${f3(taskTotal)},"n_queries":${results.size},""" +
-        s""""fmt":"[wall,task]","noisy":$noisyArr,"contended_n":${contended.size},"omitted":$omitted,"omitted_sec":${f3(omittedSec)},"queries":$qs,"sf":"$sfDir"}"""
-    }
-    val keptCount = (results.size to 0 by -1)
-      .find(n => lineWith(byTime.take(n)).length <= BudgetBytes)
-      .getOrElse(0)
-    val line = lineWith(byTime.take(keptCount).sortBy(_.n))
+    val (fullLine, line) = records(
+      outcomes.collect { case (_, Right(g)) => g },
+      outcomes.collect { case (n, Left(e)) => n -> errorText(e) }, sfDir)
     // The metric line must survive as DATA: inside `sbt run` stdout it
     // gets buried under [info] prefixes, so also write the full record
     // to a file ($SPARK_GRAFT_OUT/bench.json, or ./bench.json) and

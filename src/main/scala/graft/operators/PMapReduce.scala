@@ -11,18 +11,20 @@ import graft.sources.ProductSplitSource
   * over partitioned products/zips — the engine's `pmapreduce` family
   * (/root/reference/src/mapreduce.jl:266-342).
   *
-  * Spark-first design: per-rank partial aggregation happens inside each
-  * partition (map-side combine ≙ the reference's per-worker serial
-  * `mapreduce`, /root/reference/src/mapreduce.jl:104-124). Commutative
-  * ops then combine partials with `treeReduce` (the two-level
-  * aggregation tree subsumes the reference's host-segmented reduction
-  * tree, /root/reference/src/trees.jl:42-63). Non-commutative ops use
-  * the one semantic Spark doesn't give natively: partials are tagged
-  * with their rank, gathered, sorted by rank, and left-folded — exactly
-  * the reference's root combine (`_maybesort` + `reducechannel`,
-  * /root/reference/src/mapreduce.jl:138-146). There are at most `np`
-  * partials (np = partition count, not row count), so the gather is
-  * O(np), not O(data).
+  * Spark-first design, one scheduling law for every reduction
+  * ([[foldSlots]]): one task per slot, not one per rank. Each task
+  * serially folds a contiguous block of ranks (≙ the reference's
+  * per-worker serial `mapreduce`, reference src/mapreduce.jl:104-124),
+  * so the reduction tree has no more leaves than task slots, as the
+  * reference's has no more than workers. Commutative ops then combine
+  * slot partials with `treeReduce` (the two-level aggregation tree
+  * subsumes the reference's host-segmented reduction tree,
+  * reference src/trees.jl:42-63). Non-commutative ops use the
+  * one semantic Spark doesn't give natively: partials are tagged with
+  * their slot, gathered, sorted, and left-folded — blocks are
+  * contiguous, so that is exactly the reference's rank-ordered root
+  * combine (`_maybesort` + `reducechannel`,
+  * reference src/mapreduce.jl:138-146), O(slots), not O(data).
   *
   * `init` is folded exactly once, on the driver, after the distributed
   * reduce — never per partition (the init-once law,
@@ -30,20 +32,42 @@ import graft.sources.ProductSplitSource
   */
 object PMapReduce {
 
-  /** Combine rank-tagged partials respecting the commutativity tag. */
+  /** Combine slot- (or rank-) tagged partials respecting the
+    * commutativity tag. Keys must sort in rank order. */
   private[graft] def reducePartials[B: ClassTag](partials: RDD[(Int, B)], op: ReduceOp[B]): B = {
     if (op.commutative) {
       val n = partials.getNumPartitions
       partials.values.treeReduce(op, depth = if (n > 16) 2 else 1)
     } else {
-      // Rank-sorted left fold at the root: reference semantics for
-      // non-commutative ops. O(np) values gathered, np = #partitions.
+      // Key-sorted left fold at the root: reference semantics for
+      // non-commutative ops. O(n) values gathered, n = #partitions.
       partials.collect().sortBy(_._1).map(_._2).reduceLeft(op)
     }
   }
 
-  private def foldInit[B](init: Option[B], op: ReduceOp[B], result: B): B =
+  /** The family's scheduling law: `slots = min(npEff, defaultParallelism)`
+    * tasks; task `t` owns the contiguous rank block `dropTake(npEff,
+    * slots, t)`, computes `rankPartial(p)` once per rank and left-folds
+    * them in rank order (in place for the mutating elementwise ops), so
+    * `combine` sees one partial per slot, keyed by `t`. A single rank
+    * computes locally with no job (reference src/mapreduce.jl:269-277). */
+  private def foldSlots[B](spark: SparkSession, npEff: Int, op: ReduceOp[B], init: Option[B])
+                           (rankPartial: Int => B)(combine: RDD[(Int, B)] => B): B = {
+    val result =
+      if (npEff == 1) rankPartial(1)
+      else {
+        val slots = math.min(npEff, spark.sparkContext.defaultParallelism)
+        combine(spark.sparkContext.parallelize(1 to slots, slots).map { t =>
+          val (drop, take) = ProductIndexMath.dropTake(npEff, slots, t)
+          val end = (drop + take).toInt
+          var acc = rankPartial(drop.toInt + 1)
+          var p = drop.toInt + 2
+          while (p <= end) { acc = op(acc, rankPartial(p)); p += 1 }
+          (t, acc)
+        })
+      }
     init.map(i => op(i, result)).getOrElse(result)
+  }
 
   /** T2: host-segmented two-stage reduction for COMMUTATIVE ops — the
     * reference's `SegmentedOrderedBinaryTree` rationale: reduce WITHIN
@@ -68,16 +92,16 @@ object PMapReduce {
     * segmented tree does because its rank->host layout is contiguous
     * by construction (/root/reference/src/trees.jl:108-137); Spark's
     * scheduler placement is not, so the same contiguous layout is
-    * built explicitly: ranks are range-partitioned into segments with
-    * the engine's own split law ([[ProductIndexMath.rankOfIndex]]),
-    * rank-sorted within each segment, left-folded, and the per-segment
-    * partials combine in segment (= min-rank) order on the driver.
-    * That costs one shuffle of np partials; commutative ops keep the
+    * built explicitly: partials are range-partitioned into segments
+    * with the engine's own split law ([[ProductIndexMath.rankOfIndex]]),
+    * key-sorted within each segment, left-folded, and the per-segment
+    * partials combine in segment (= min-key) order on the driver.
+    * That costs one shuffle of the partials; commutative ops keep the
     * shuffle-free locality-aware coalesce.
     *
-    * `partials` is keyed by 1-based rank; ranks must be 1..np with
-    * np = `partials.getNumPartitions` (how every pmapreduce* builds
-    * them). */
+    * `partials` is keyed 1..n with n = `partials.getNumPartitions`, in
+    * rank order: per-slot keys from [[foldSlots]] (how every
+    * pmapreduce* builds them) or per-rank keys. */
   def hostSegmentedReduce[B: ClassTag](spark: SparkSession, partials: RDD[(Int, B)],
                                        op: ReduceOp[B],
                                        segments: Option[Int] = None): B = {
@@ -108,61 +132,40 @@ object PMapReduce {
   }
 
   /** E1 (zip mode) with the T2 host-segmented combine instead of
-    * `treeReduce` — same per-partition serial fold as [[pmapreduce]],
-    * then [[hostSegmentedReduce]] over the per-rank partials. */
+    * `treeReduce` — same slot-blocked serial fold as [[pmapreduce]],
+    * then [[hostSegmentedReduce]] over the slot partials. */
   def pmapreduceSegmented[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                                       (f: IndexedSeq[Double] => B, op: ReduceOp[B],
                                        init: Option[B] = None,
-                                       segments: Option[Int] = None): B = {
-    val len = iters.map(_.numElems).min
-    require(len > 0, "cannot reduce over an empty collection")
-    val rs = iters.toArray
-    def elem(j: Long): IndexedSeq[Double] = {
-      val arr = new Array[Double](rs.length)
-      var k = 0
-      while (k < rs.length) { arr(k) = rs(k)(j); k += 1 }
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
-    }
-    val npEff = math.max(1L, math.min(np.toLong, len)).toInt
-    if (npEff == 1) {
-      foldInit(init, op, (0L until len).iterator.map(j => f(elem(j))).reduceLeft(op))
-    } else {
-      val partials = spark.sparkContext.parallelize(1 to npEff, npEff).map { p =>
-        val (drop, take) = ProductIndexMath.dropTake(len, npEff, p)
-        (p, (drop until drop + take).iterator.map(j => f(elem(j))).reduceLeft(op))
-      }
-      foldInit(init, op, hostSegmentedReduce(spark, partials, op, segments))
-    }
-  }
+                                       segments: Option[Int] = None): B =
+    zipMapReduce(spark, iters, np, f, op, init)(hostSegmentedReduce(spark, _, op, segments))
 
   /** E2: `f` receives each rank's whole ProductSlice once (MPI-style;
     * /root/reference/docs/src/pmapreduce.md:58-93), partials reduced by
     * `op` in rank order. `f` may use every §2.2 point query on the
-    * slice. Fast path: a single rank computes locally with no job
-    * (/root/reference/src/mapreduce.jl:269-277). */
+    * slice. */
   def pmapreduceProductSplit[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                                          (f: ProductSlice => B, op: ReduceOp[B],
                                           init: Option[B] = None): B = {
-    val len = ProductIndexMath.totalLength(iters)
-    val npEff = math.max(1L, math.min(np.toLong, len)).toInt
-    if (npEff == 1) {
-      foldInit(init, op, f(ProductIndexMath.productSplit(iters, 1, 1)))
-    } else {
-      val partials = ProductSplitSource.productSliceRDD(spark, iters, npEff)
-        .mapPartitions(_.map { case (p, slice) => (p, f(slice)) }, preservesPartitioning = true)
-      foldInit(init, op, reducePartials(partials, op))
-    }
+    val npEff = math.max(1L, math.min(np.toLong, ProductIndexMath.totalLength(iters))).toInt
+    foldSlots(spark, npEff, op, init)(p => f(ProductIndexMath.productSplit(iters, npEff, p)))(
+      reducePartials(_, op))
   }
 
   /** E1 (zip mode): splat the j-th element of every range into `f`,
     * reduce with `op` (/root/reference/src/mapreduce.jl:266-287). Each
-    * partition left-folds its slice serially (ordered within rank), so
-    * only one partial per rank crosses the network. The element tuple
-    * is built in a primitive array (one allocation, no builders) —
+    * rank left-folds its slice serially (ordered within rank), each task
+    * its ranks, so one partial per slot crosses the network. The element
+    * tuple is built in a primitive array (one allocation, no builders) —
     * this loop runs once per element of potentially 10^8+. */
   def pmapreduce[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int)
                              (f: IndexedSeq[Double] => B, op: ReduceOp[B],
-                              init: Option[B] = None): B = {
+                              init: Option[B] = None): B =
+    zipMapReduce(spark, iters, np, f, op, init)(reducePartials(_, op))
+
+  private def zipMapReduce[B: ClassTag](spark: SparkSession, iters: IndexedSeq[PRange], np: Int,
+                                        f: IndexedSeq[Double] => B, op: ReduceOp[B],
+                                        init: Option[B])(combine: RDD[(Int, B)] => B): B = {
     val len = iters.map(_.numElems).min
     val rs = iters.toArray
     mapReduceIndexed(spark, len, np, { j =>
@@ -170,7 +173,7 @@ object PMapReduce {
       var k = 0
       while (k < rs.length) { arr(k) = rs(k)(j); k += 1 }
       f(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
-    }, op, init)
+    }, op, init)(combine)
   }
 
   /** E1 (product mode): elements of the full product split across ranks,
@@ -195,16 +198,16 @@ object PMapReduce {
         k += 1
       }
       f(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
-    }, op, init)
+    }, op, init)(reducePartials(_, op))
   }
 
   private def mapReduceIndexed[B: ClassTag](spark: SparkSession, len: Long, np: Int,
-                                            f: Long => B, op: ReduceOp[B],
-                                            init: Option[B]): B = {
+                                            f: Long => B, op: ReduceOp[B], init: Option[B])
+                                           (combine: RDD[(Int, B)] => B): B = {
     require(len > 0, "cannot reduce over an empty collection")
     val npEff = math.max(1L, math.min(np.toLong, len)).toInt
     // Plain while loops, not Range.iterator.map(f).reduceLeft(op): the
-    // per-partition fold may run 10^8+ iterations, and the iterator
+    // per-rank fold may run 10^8+ iterations, and the iterator
     // chain (NumericRange[Long] boxing + two megamorphic apply sites)
     // both costs per element and takes C2 several seconds of profiling
     // to JIT — which showed up as multi-second scatter in repeated
@@ -217,15 +220,10 @@ object PMapReduce {
       while (j < end) { acc = op(acc, f(j)); j += 1 }
       acc
     }
-    if (npEff == 1) {
-      foldInit(init, op, foldRange(0L, len))
-    } else {
-      val partials = spark.sparkContext.parallelize(1 to npEff, npEff).map { p =>
-        val (drop, take) = ProductIndexMath.dropTake(len, npEff, p)
-        (p, foldRange(drop, take))
-      }
-      foldInit(init, op, reducePartials(partials, op))
-    }
+    foldSlots(spark, npEff, op, init) { p =>
+      val (drop, take) = ProductIndexMath.dropTake(len, npEff, p)
+      foldRange(drop, take)
+    }(combine)
   }
 
   /** E3: `pmap` — ordered per-element results

@@ -230,9 +230,10 @@ object CoreQueries {
     }),
 
     // Reference flagship payload (docs/src/index.md:22-45): reduce
-    // large arrays with in-place elementwise sum — per-partition
-    // map-side combine means one 800 KB partial per rank crosses the
-    // "network", not 224 of them. 224 × 100k-double arrays -> one array.
+    // large arrays with in-place elementwise sum — each task folds its
+    // block of the 32 ranks in place, so one 800 KB partial per task
+    // slot crosses the "network", not one per rank and not 224 of them.
+    // 224 × 100k-double arrays -> one array.
     "pmr_array_elsum" -> ((s, _) => {
       val v = PMapReduce.pmapreduce(s, IndexedSeq(PRange(1L, 224L)), 32)(
         _ => Array.fill(100000)(1.0), ReduceOp.elementwiseSum)

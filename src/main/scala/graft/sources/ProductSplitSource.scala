@@ -143,13 +143,4 @@ object ProductSplitSource {
       .parallelize(1 to npEff, npEff)
       .map(p => (p, ProductIndexMath.productSplit(iters, npEff, p)))
   }
-
-  /** Zip-mode slices: `(rank, indices [drop, drop+take) into the zip)`. */
-  def zipSliceRDD(spark: SparkSession, iters: IndexedSeq[PRange], np: Int): RDD[(Int, (Long, Long))] = {
-    val len = iters.map(_.numElems).min
-    val npEff = numParts(np, len)
-    spark.sparkContext
-      .parallelize(1 to npEff, npEff)
-      .map { p => (p, ProductIndexMath.dropTake(len, npEff, p)) }
-  }
 }

@@ -279,6 +279,100 @@ class PMapReduceSpec extends AnyFunSuite {
     assert(got == want)
   }
 
+  /** Jobs, stages, tasks and shuffle-write bytes of the jobs `body` runs. */
+  private def scheduled[A](body: => A): (A, Int, Int, Int, Long) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs, stages, tasks = new java.util.concurrent.atomic.AtomicInteger
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = { stages.incrementAndGet(); () }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        if (e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        ()
+      }
+    }
+    org.apache.spark.graftbridge.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.graftbridge.ListenerBusDrain.drain(sc)
+      (out, jobs.get, stages.get, tasks.get, shuffleBytes.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("slot blocking: uneven rank blocks match the serial oracle on E1 zip, E1 product and E2") {
+    val sum = ReduceOp.commutative[Long](_ + _)
+    val zip = IndexedSeq(PRange(1, 101), PRange.stepped(3, 2, 401))
+    val zipWant = (1L to 101L).map(x => x * (1 + 2 * x)).toVector
+    val prod = IndexedSeq(PRange(1, 7), PRange(2, 10))
+    val prodWant = ProductIndexMath.productSplit(prod, 1, 1).toVector.map(v => (v(0) * v(1)).toLong)
+    for (np <- Seq(3, 5, 7, 9, 33); init <- Seq(None, Some(-1L))) {
+      val vInit = init.map(Vector(_))
+      val ctx = s"np=$np init=$init slots=${spark.sparkContext.defaultParallelism}"
+      // E1 zip
+      assert(pmapreduce(spark, zip, np)(v => (v(0) * v(1)).toLong, sum, init) ==
+        zipWant.sum + init.getOrElse(0L), ctx)
+      assert(pmapreduce(spark, zip, np)(v => Vector((v(0) * v(1)).toLong), ReduceOp.concat[Long], vInit) ==
+        vInit.getOrElse(Vector.empty) ++ zipWant, ctx)
+      // E1 product
+      assert(pmapreduceProduct(spark, prod, np)(v => (v(0) * v(1)).toLong, sum, init) ==
+        prodWant.sum + init.getOrElse(0L), ctx)
+      assert(pmapreduceProduct(spark, prod, np)(v => Vector((v(0) * v(1)).toLong), ReduceOp.concat[Long], vInit) ==
+        vInit.getOrElse(Vector.empty) ++ prodWant, ctx)
+      // E2
+      assert(pmapreduceProductSplit(spark, prod, np)(
+        _.iterator.map(v => (v(0) * v(1)).toLong).sum, sum, init) == prodWant.sum + init.getOrElse(0L), ctx)
+      assert(pmapreduceProductSplit(spark, prod, np)(
+        _.toVector.map(v => (v(0) * v(1)).toLong), ReduceOp.concat[Long], vInit) ==
+        vInit.getOrElse(Vector.empty) ++ prodWant, ctx)
+    }
+  }
+
+  test("slot blocking: E2 calls f exactly once per rank, ranks 1..npEff in order") {
+    val iters = IndexedSeq(PRange(1, 7), PRange(2, 10))
+    for (np <- Seq(3, 5, 7, 9, 33, 100)) {
+      val npEff = math.min(np, 63)
+      val calls = spark.sparkContext.longAccumulator(s"calls-$np")
+      val ranks = pmapreduceProductSplit(spark, iters, np)({ ps =>
+        calls.add(1)
+        Vector(ProductIndexMath.rankOfIndex(63, npEff, ps.firstFlat))
+      }, ReduceOp.concat[Int])
+      assert(ranks == (1 to npEff).toVector, s"np=$np")
+      assert(calls.value == npEff.toLong, s"np=$np")
+    }
+  }
+
+  test("slot blocking: np=32 runs one stage of at most defaultParallelism tasks, no shuffle") {
+    val slots = spark.sparkContext.defaultParallelism
+    val elems = IndexedSeq(PRange(1, 224))
+    val (sum, jobs, stages, tasks, shuffle) = scheduled(
+      pmapreduce(spark, elems, 32)(t => Array.tabulate(1000)(i => t(0) + i), ReduceOp.elementwiseSum))
+    assert(sum(0) == 224.0 * 225 / 2 && sum(999) == 224.0 * 225 / 2 + 224 * 999)
+    assert((jobs, stages) == ((1, 1)))
+    assert(tasks <= slots && tasks == math.min(32, slots), s"tasks=$tasks slots=$slots")
+    assert(shuffle == 0L)
+    val (cat, cJobs, cStages, cTasks, cShuffle) = scheduled(
+      pmapreduce(spark, elems, 32)(t => Vector(t(0).toLong), ReduceOp.concat[Long]))
+    assert(cat == (1L to 224L).toVector)
+    assert((cJobs, cStages, cShuffle) == ((1, 1, 0L)) && cTasks <= slots)
+  }
+
+  test("reducePartials keeps the treeReduce(depth = 2) branch for more than 16 partitions") {
+    val scrambled = scala.util.Random.shuffle((1 to 32).toVector)
+    val keyed = spark.sparkContext.parallelize(scrambled, 32).map(r => (r, Vector(r.toLong)))
+    // commutative: the depth-2 tree adds a shuffle stage
+    val (sum, _, stages, _, shuffle) = scheduled(
+      reducePartials(keyed.mapValues(_.sum), ReduceOp.commutative[Long](_ + _)))
+    assert(sum == 32L * 33 / 2)
+    assert(stages == 2 && shuffle > 0L, s"stages=$stages shuffle=$shuffle")
+    // non-commutative: key-sorted root fold, whatever the partition order
+    assert(reducePartials(keyed, ReduceOp.concat[Long]) == (1L to 32L).toVector)
+  }
+
   test("zippedDF truncates to shortest and matches positions") {
     import org.apache.spark.sql.functions.col
     val iters = IndexedSeq(PRange(1, 10), PRange.stepped(2, 2, 20))
